@@ -158,8 +158,10 @@ class LogStore:
             .orderBy("split_index")
         )
 
-    def scan(self, **kwargs) -> DataFrame:
-        return filtered_scan(self.df(), user_col=self.user_col, **kwargs)
+    def scan(self, id_col: str = "id", **kwargs) -> DataFrame:
+        return filtered_scan(
+            self.df(), user_col=self.user_col, id_col=id_col, **kwargs
+        )
 
     def page(
         self,

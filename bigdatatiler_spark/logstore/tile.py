@@ -39,7 +39,7 @@ EST_SAFETY = 0.7           # compression-ratio estimate safety (LogChange.cs:123
 FIRST_FLOOR = 50_000       # first-pass min chunk chars (LogChange.cs:127-130)
 RESPLIT_FLOOR = 10_000     # re-split min chunk chars (LogChange.cs:232-235)
 RESPLIT_MARGIN = 1.3       # shrink margin on observed overage (LogChange.cs:229)
-MAX_RESPLIT_ROUNDS = 8     # loop bound (the floor guarantees termination anyway)
+MAX_RESPLIT_ROUNDS = 8     # loop bound; running out raises FixpointNotConverged
 
 
 def tile(
@@ -131,7 +131,9 @@ def tile_bytecap(
     *still-oversized residue only* (shrinking geometrically), no shuffle
     until the final per-record renumber (one exchange); the loop is
     driver-controlled but bounded and each round's decision is a
-    1-row isEmpty, never a data collect. Output: ``id_col``,
+    1-row count, never a data collect. A residue still over the cap
+    after ``max_rounds`` raises ``FixpointNotConverged`` rather than
+    dropping its text. Output: ``id_col``,
     ``keep_cols``, ``split_index``, ``total_splits``, ``parent_id``,
     ``chunk``, ``zipped`` (the validated archive), ``zip_bytes``.
     """
@@ -153,7 +155,7 @@ def tile_bytecap(
     # and truncates the plan, fixing both: each branch reads the RDD
     # directly. On a real multi-file corpus the repartition is a no-op
     # decision; the checkpoint is executor-local, same as graph.py.
-    from ..operators._util import ensure_parallelism
+    from ..operators._util import FixpointNotConverged, ensure_parallelism
 
     whole = (
         ensure_parallelism(
@@ -244,6 +246,13 @@ def tile_bytecap(
             F.concat("idx", F.array("pos")).alias("idx"),
             F.col("sub").alias("chunk"),
             "cc",
+        )
+    else:
+        # the last round's re-split residue was never zipped or emitted:
+        # returning now would drop its text
+        raise FixpointNotConverged(
+            f"tile_bytecap: chunks still over {max_zip_bytes} zip bytes "
+            f"after max_rounds={max_rounds}"
         )
 
     leaves = done[0]

@@ -285,3 +285,10 @@ def distributed_prefix_sum(
         .withColumn(name, (F.col("_off") + F.col("_w")).cast("long"))
         .drop("_rb", "_w", "_off")
     )
+
+
+class FixpointNotConverged(RuntimeError):
+    """A bounded iterative operator used up its round budget before
+    reaching its fixpoint. Its partial state is not a valid answer
+    (partly merged components, a re-split residue that was never
+    emitted), so it raises instead of returning one."""

@@ -1,31 +1,36 @@
-"""Iterative graph operator: connected components for dedup clustering.
+"""Iterative graph operators: connected components for dedup clustering,
+plus bounded BFS and k-core peeling over the same near-dup graph.
 
 Pair-level dedup (MinHash/SimHash/cosine) emits *edges*; turning them
 into canonical groups ("keep one doc per cluster") is connected
 components over the dup graph — the step every large-scale dedup
-pipeline ends with, and the engine's one genuinely iterative algorithm.
+pipeline ends with, and the engine's one unbounded iterative algorithm.
 
-Spark-first shape: label propagation to a fixpoint —
-each node starts labeled with itself, every iteration each node takes the
-min label among itself and its neighbors, convergence when no label
-changes. Each iteration is two equi-joins + a groupBy (all built-in,
-shuffle on doc_id); the *driver* only coordinates the loop and reads a
-1-row convergence count — no data ever collects. ``localCheckpoint``
-truncates lineage each round, or iteration N replays rounds 1..N-1 and
-the plan grows exponentially (the classic iterative-Spark trap).
+Spark-first shape: alternating large-star/small-star (Kiveris et al.,
+"Connected Components in MapReduce and Beyond"). Each round is
+groupBy-min + equi-joins on the edge list, every shuffle keyed by node
+id; the *driver* only coordinates the loop and reads a 1-row
+convergence count — no data ever collects. The star iteration contracts
+paths, so it converges in O(log² n) rounds whatever the cluster
+diameter; a chained near-dup cluster (doc A ~ B ~ C ~ ..., common in
+scraped corpora where each revision resembles the last) would need
+O(diameter) rounds under label propagation. Each round's result is
+lineage-cut (:func:`_cut`), or iteration N replays rounds 1..N-1 and the
+plan grows without bound (the classic iterative-Spark trap). Running out
+of rounds raises :class:`FixpointNotConverged` rather than returning
+partly merged labels.
 
-Iterations needed = graph diameter (near-dup clusters are shallow — a
-handful of rounds); MAX_ITERS bounds the worst case. The DuckDB oracle
-computes the same fixpoint declaratively with a recursive CTE (min label
-over the reachable set), so the iterative implementation is verified
-against an independent formulation.
+The DuckDB oracle computes the same min-node-id labels declaratively
+with a recursive CTE (min label over the reachable set), so the
+iterative implementation is verified against an independent
+formulation.
 
 Why not Spark's own recursive CTE (new in Spark 4)? Checked: it accepts
 only UNION ALL recursion ([UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE]), and
 without set-dedup between rounds a reachability recursion on a CYCLIC
 dup graph never terminates — DuckDB's UNION-dedup semantics are exactly
 what makes the oracle's formulation legal there. The driver-coordinated
-loop (or the two-star variant below) stays the correct Spark shape.
+loop stays the correct Spark shape.
 """
 
 from __future__ import annotations
@@ -33,28 +38,45 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..registry import register
+from ._util import FixpointNotConverged
 from .dedup import _SHINGLED_SQL, minhash_bands, minhash_bands_sql
 
 MAX_ITERS = 15
 
 
-def _validate_lineage_cut(edges: DataFrame, lineage_cut: str) -> None:
-    """Fail fast (shared by both algorithms): bad mode, or 'reliable'
-    without a checkpoint dir — better than a raw SparkException rounds in."""
-    if lineage_cut not in ("local", "reliable"):
+def _cut(df: DataFrame, lineage_cut: str) -> DataFrame:
+    """Materialize one round of an iterative loop so its plan stays O(1)
+    per iteration. ``lineage_cut`` picks how:
+
+    - ``"local"`` — ``localCheckpoint(eager=False)``: executor-local
+      blocks, no extra I/O. The plan is truncated at once and the blocks
+      materialize inside the round's own convergence action, so a round
+      costs one job, not two. Right for local mode and short interactive
+      runs, but an executor loss mid-loop destroys its blocks and FAILS
+      THE JOB (the lineage needed to recompute them was just truncated).
+    - ``"reliable"`` — ``checkpoint``: rounds persist to the cluster's
+      fault-tolerant checkpoint dir (``spark.sparkContext.
+      setCheckpointDir`` — HDFS/object store on a real cluster), so the
+      loop survives executor loss. The per-round write is the loop state
+      only, not the upstream corpus. This is the 100 TB setting.
+
+    A bad mode, or "reliable" without a checkpoint dir, raises
+    ``ValueError`` at the loop's first cut — before any round runs."""
+    if lineage_cut == "local":
+        return df.localCheckpoint(eager=False)
+    if lineage_cut != "reliable":
         raise ValueError(f"lineage_cut must be 'local' or 'reliable', got {lineage_cut!r}")
-    if lineage_cut == "reliable":
-        sc = edges.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            raise ValueError(
-                "lineage_cut='reliable' needs spark.sparkContext.setCheckpointDir "
-                "(a fault-tolerant path on a real cluster)"
-            )
+    if df.sparkSession.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
+        raise ValueError(
+            "lineage_cut='reliable' needs spark.sparkContext.setCheckpointDir "
+            "(a fault-tolerant path on a real cluster)"
+        )
+    return df.checkpoint()
 
 
 def _band_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash band-mate candidate pairs as undirected (a, b) edges — the
-    shared input of both clustering algorithms (same banding kernel as
+    shared input of the graph queries (same banding kernel as
     dedup_minhash_lsh's candidate stage)."""
     from .dedup import _shingled
 
@@ -77,150 +99,50 @@ def connected_components(
     node_col_a: str,
     node_col_b: str,
     lineage_cut: str = "local",
+    max_rounds: int = MAX_ITERS,
 ) -> DataFrame:
-    """(node, cluster_id): min node id reachable in the undirected graph.
+    """(node, cluster_id): min node id reachable in the undirected graph,
+    by alternating large-star/small-star rounds.
 
     ``edges`` rows are undirected pairs; isolated nodes (absent from
     edges) are the caller's concern — a left join + coalesce(doc_id)
-    afterwards keeps singletons as their own cluster.
-
-    ``lineage_cut`` picks how each round's result is materialized so the
-    plan stays O(1) per iteration (without a cut, iteration N replays
-    rounds 1..N-1 and the plan grows without bound):
-
-    - ``"local"`` — ``localCheckpoint``: executor-local blocks, no extra
-      I/O. Right for local mode and short interactive runs, but an
-      executor loss mid-loop destroys its blocks and FAILS THE JOB
-      (the lineage needed to recompute them was just truncated).
-    - ``"reliable"`` — ``checkpoint``: rounds persist to the cluster's
-      fault-tolerant checkpoint dir (``spark.sparkContext.
-      setCheckpointDir`` — HDFS/object store on a real cluster), so the
-      loop survives executor loss. The per-round write is labels+edges
-      only, not the upstream corpus. This is the 100 TB setting.
-    """
-    _validate_lineage_cut(edges, lineage_cut)
-
-    def cut(df: DataFrame) -> DataFrame:
-        # eager=False: the checkpoint cut (LogicalRDD plan truncation) is
-        # applied immediately, but block materialization folds into the
-        # round's convergence action instead of a separate job — one job
-        # per round, not two (r12 optimization; semantics identical)
-        return (
-            df.localCheckpoint(eager=False)
-            if lineage_cut == "local"
-            else df.checkpoint()
-        )
-
-    fwd = edges.select(
-        F.col(node_col_a).alias("src"), F.col(node_col_b).alias("dst")
-    )
-    # materialize the symmetrized edge set once — every iteration joins it,
-    # and without this the upstream edge computation (e.g. the MinHash band
-    # self-join) replays per round
-    both = cut(
-        fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-    )
-    labels = cut(
-        both.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-    )
-    for _ in range(MAX_ITERS):
-        neighbor_min = (
-            both.join(labels, both.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = cut(  # truncate lineage: O(1) plan per round
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
-                (F.col("nbr_label") < F.col("label")).alias("_changed"),
-            )
-        )
-        # full count, not limit(1): the scan doubles as the lazy
-        # checkpoint's materializing job over every partition
-        changed = new_labels.where(F.col("_changed")).count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            break
-    return labels.select("node", F.col("label").alias("cluster_id"))
-
-
-def connected_components_star(
-    edges: DataFrame,
-    node_col_a: str,
-    node_col_b: str,
-    lineage_cut: str = "local",
-    max_rounds: int = MAX_ITERS,
-) -> DataFrame:
-    """(node, cluster_id) via alternating large-star/small-star (Kiveris
-    et al., "Connected Components in MapReduce and Beyond") — the
-    100 TB-hardened alternative to :func:`connected_components`.
-
-    Label propagation converges in O(graph diameter) rounds; a chained
-    near-dup cluster (doc A ~ B ~ C ~ ... — common in scraped corpora
-    where each revision resembles the last) makes the diameter, and thus
-    the round count, unbounded. The two-star iteration contracts paths
-    aggressively and converges in O(log² n) rounds regardless of
-    diameter, with the same per-round cost shape (groupBy-min + equi-join
-    on the edge list, everything keyed by node id — no all-pairs, no
-    driver data).
+    afterwards keeps singletons as their own cluster. ``lineage_cut`` is
+    documented at :func:`_cut`.
 
     Each round:
     - large-star: every node u connects its strictly-larger neighbors to
       ``min(N(u) ∪ {u})`` → edges always point larger→smaller afterwards;
     - small-star: every node u re-points its parent set P at ``min(P)``
       and keeps ``(u, min(P))``.
-    Fixpoint = forest of stars rooted at each component's min node, so
-    the final edge list IS the (node, cluster_id) mapping.
+    Both steps preserve connectivity, and the fixpoint is a forest of
+    stars rooted at each component's min node: every node has at most
+    one parent, and no parent has a parent of its own. The loop stops as
+    soon as the edge list is such a forest — an exact test, so no
+    confirmation round is spent — and raises
+    :class:`FixpointNotConverged` if ``max_rounds`` pass first.
+
+    The returned frame is the last round's lineage-cut label table, one
+    row per node, already materialized by that round's convergence count.
     """
-    _validate_lineage_cut(edges, lineage_cut)
-
-    def cut(df: DataFrame) -> DataFrame:
-        # eager=False: the checkpoint cut (LogicalRDD plan truncation) is
-        # applied immediately, but block materialization folds into the
-        # round's convergence action instead of a separate job — one job
-        # per round, not two (r12 optimization; semantics identical)
-        return (
-            df.localCheckpoint(eager=False)
-            if lineage_cut == "local"
-            else df.checkpoint()
-        )
-
-    def sig(df: DataFrame) -> tuple:
-        """Cheap set signature (count, Σ xxhash64 as exact decimal) for the
-        convergence check: two 1-row aggregates instead of exceptAll's full
-        shuffle+sort per round. Both rounds' edge lists are DISTINCT sets,
-        so count+hash-sum equality means set equality up to a 2^-64-scale
-        collision — negligible against the cost it removes."""
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
     raw = edges.select(
         F.col(node_col_a).alias("src"), F.col(node_col_b).alias("dst")
     )
-    nodes = cut(
+    nodes = _cut(
         raw.select(F.col("src").alias("node"))
         .union(raw.select(F.col("dst").alias("node")))
-        .distinct()
+        .distinct(),
+        lineage_cut,
     )
     # canonical parent edges: larger → smaller, no self-loops
-    e = cut(
+    e = _cut(
         raw.where(F.col("src") != F.col("dst"))
         .select(
             F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
         )
-        .distinct()
+        .distinct(),
+        lineage_cut,
     )
-    e_sig = sig(e)
+    no_parent = F.lit(None).cast(nodes.schema["node"].dataType)
     for _ in range(max_rounds):
         sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         # large-star: m(u) = min(N(u) ∪ {u}); emit (v, m(u)) for v > u
@@ -230,7 +152,7 @@ def connected_components_star(
             .select("src", F.least("src", "mn").alias("m"))
         )
         # no .distinct() here (r12): min-aggregation below is duplicate-
-        # insensitive and new_e re-distincts, so the extra (src, dst)
+        # insensitive and e re-distincts, so the extra (src, dst)
         # exchange bought nothing — one fewer shuffle per round
         large = (
             sym.join(mins, "src")
@@ -245,26 +167,42 @@ def connected_components_star(
             .where(F.col("dst") != F.col("m"))
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         )
-        new_e = cut(
+        e = _cut(
             repointed.union(mins2.select("src", F.col("m").alias("dst")))
             .where(F.col("src") != F.col("dst"))
-            .distinct()
+            .distinct(),
+            lineage_cut,
         )
-        new_sig = sig(new_e)
-        e = new_e
-        if new_sig == e_sig:
-            break
-        e_sig = new_sig
-    # min-resolve before the mapping join: if max_rounds exhausted before
-    # the fixpoint, a node can still carry two outgoing edges — the output
-    # must stay one row per node (partially-contracted labels degrade the
-    # same way label propagation's cutoff does, but never duplicate rows)
-    labels = e.groupBy("src").agg(F.min("dst").alias("label"))
-    return nodes.join(
-        labels.select(F.col("src").alias("node"), "label"),
-        "node",
-        "left",
-    ).select("node", F.coalesce("label", "node").alias("cluster_id"))
+        # one row per node: its parents (out-edges) and children (in-edges)
+        labels = _cut(
+            e.select(
+                F.col("src").alias("node"),
+                F.col("dst").alias("parent"),
+                F.lit(0).alias("child"),
+            )
+            .union(e.select("dst", no_parent, F.lit(1)))
+            .union(nodes.select("node", no_parent, F.lit(0)))
+            .groupBy("node")
+            .agg(
+                F.min("parent").alias("parent"),
+                F.count("parent").alias("n_parents"),
+                F.max("child").alias("has_child"),
+            ),
+            lineage_cut,
+        )
+        # full count, not limit(1): the scan doubles as the lazy cuts'
+        # materializing job over every partition
+        not_star = labels.where(
+            (F.col("n_parents") > 1)
+            | ((F.col("n_parents") == 1) & (F.col("has_child") == 1))
+        ).count()
+        if not_star == 0:
+            return labels.select(
+                "node", F.coalesce("parent", "node").alias("cluster_id")
+            )
+    raise FixpointNotConverged(
+        f"connected_components: no star forest after max_rounds={max_rounds}"
+    )
 
 
 def _cc_oracle() -> str:
@@ -291,28 +229,16 @@ def _cc_oracle() -> str:
     """
 
 
+@register("dedup_components_two_star", oracle=_cc_oracle())
 @register("dedup_connected_components", oracle=_cc_oracle())
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical dedup clusters: MinHash band-mate candidate pairs as
     edges → connected components → (doc_id, cluster_id = min doc in
     component). cluster_id is the canonical survivor; `WHERE doc_id !=
-    cluster_id` is the delete list. Iterative label propagation (see
-    module docstring) verified against DuckDB's recursive-CTE fixpoint."""
+    cluster_id` is the delete list. Large-star/small-star iteration (see
+    module docstring) verified against DuckDB's recursive-CTE fixpoint.
+    Registered under both query names; both share the oracle."""
     return connected_components(_band_edges(spark, sf_dir), "a", "b").select(
-        F.col("node").alias("doc_id"), "cluster_id"
-    )
-
-
-@register("dedup_components_two_star", oracle=_cc_oracle())
-def dedup_components_two_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same dedup clustering as dedup_connected_components, computed by
-    the alternating large-star/small-star iteration instead of label
-    propagation — O(log² n) rounds independent of cluster diameter (the
-    100 TB-hardened path for chained near-dup clusters). Identical
-    fixpoint, so it shares the recursive-CTE oracle verbatim: the driver
-    cross-check proves both algorithms agree with the independent
-    declarative formulation."""
-    return connected_components_star(_band_edges(spark, sf_dir), "a", "b").select(
         F.col("node").alias("doc_id"), "cluster_id"
     )
 
@@ -377,7 +303,7 @@ def old_labels_path(
         # longer overwrite each other's half-read store; the loser's
         # rename fails on the existing dir and its copy is swept.
         tmp = f"{path}.build.{os.getpid()}"
-        connected_components_star(old_edges, "a", "b").select(
+        connected_components(old_edges, "a", "b").select(
             F.col("node"), F.col("cluster_id").alias("rep")
         ).write.mode("overwrite").parquet(tmp)
         try:
@@ -447,7 +373,7 @@ def dedup_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         # both endpoints already in one old component: nothing to merge
         .where(F.col("ca") != F.col("cb"))
     )
-    merged = connected_components_star(contracted, "ca", "cb").select(
+    merged = connected_components(contracted, "ca", "cb").select(
         F.col("node").alias("rep"), F.col("cluster_id").alias("final")
     )
 
@@ -520,7 +446,7 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shingled universe against the clustered nodes."""
     from .dedup import _shingled
 
-    comp = connected_components_star(
+    comp = connected_components(
         _band_edges(spark, sf_dir), "a", "b"
     ).select(F.col("node").alias("doc_id"), "cluster_id")
     sizes = comp.groupBy("cluster_id").agg(
@@ -812,8 +738,8 @@ def sample_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "how far (in dup-graph hops) is every document from a trusted seed
 # set?" — contamination spreads along near-dup edges, so hop distance
 # from known-contaminated (or known-good) seeds is the standard blast-
-# radius metric. New kernel class beside the two fixpoint algorithms
-# above: BOUNDED multi-source BFS (min-plus iteration to depth K), i.e.
+# radius metric. New kernel class beside the connected-components
+# fixpoint above: BOUNDED multi-source BFS (min-plus iteration to depth K), i.e.
 # shortest paths where every edge has weight 1.
 #
 # Spark-first shape: DELTA iteration. Each round joins only the
@@ -824,7 +750,7 @@ def sample_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # components: without it round N replays rounds 1..N-1). At 100 TB the
 # loop is K bounded rounds of (broadcast-or-shuffle equi-join + groupBy
 # min) on node id — no all-pairs, no driver data; `lineage_cut=
-# "reliable"` is the cluster setting (see connected_components).
+# "reliable"` is the cluster setting (see _cut).
 #
 # The DuckDB oracle is the independent declarative formulation: a
 # recursive CTE walking (node, hops) pairs with UNION dedup, depth-
@@ -847,25 +773,16 @@ def bfs_hops(
     ``node`` column. Seeds themselves emit hops = 0 whether or not they
     appear in the graph (an isolated seed is still distance 0 from
     itself)."""
-    _validate_lineage_cut(edges, lineage_cut)
-
-    def cut(df: DataFrame) -> DataFrame:
-        # eager=False: the checkpoint cut (LogicalRDD plan truncation) is
-        # applied immediately, but block materialization folds into the
-        # round's convergence action instead of a separate job — one job
-        # per round, not two (r12 optimization; semantics identical)
-        return (
-            df.localCheckpoint(eager=False)
-            if lineage_cut == "local"
-            else df.checkpoint()
-        )
-
     fwd = edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    both = cut(
+    both = _cut(
         fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
+        .distinct(),
+        lineage_cut,
     )
-    dist = cut(seeds.select("node", F.lit(0).cast("bigint").alias("hops")).distinct())
+    dist = _cut(
+        seeds.select("node", F.lit(0).cast("bigint").alias("hops")).distinct(),
+        lineage_cut,
+    )
     frontier = dist
     for _ in range(max_hops):
         # relax one hop out of the frontier only (delta iteration)
@@ -875,16 +792,18 @@ def bfs_hops(
             .groupBy("node")
             .agg(F.min("hops").alias("hops"))
         )
-        improved = cut(
+        improved = _cut(
             candidates.join(dist.withColumnRenamed("hops", "old"), "node", "left")
             .where(F.col("old").isNull() | (F.col("hops") < F.col("old")))
-            .select("node", "hops")
+            .select("node", "hops"),
+            lineage_cut,
         )
         # full count: materializes the lazy checkpoint in the same job
         if improved.count() == 0:
             break
-        dist = cut(
-            dist.union(improved).groupBy("node").agg(F.min("hops").alias("hops"))
+        dist = _cut(
+            dist.union(improved).groupBy("node").agg(F.min("hops").alias("hops")),
+            lineage_cut,
         )
         frontier = improved
     return dist
@@ -959,23 +878,11 @@ def kcore_peel(
     """(node, degree): nodes surviving `rounds` peels at threshold k,
     with their degree in the induced subgraph after the last peel.
     ``edges`` rows are undirected (a, b) pairs."""
-    _validate_lineage_cut(edges, lineage_cut)
-
-    def cut(df: DataFrame) -> DataFrame:
-        # eager=False: the checkpoint cut (LogicalRDD plan truncation) is
-        # applied immediately, but block materialization folds into the
-        # round's convergence action instead of a separate job — one job
-        # per round, not two (r12 optimization; semantics identical)
-        return (
-            df.localCheckpoint(eager=False)
-            if lineage_cut == "local"
-            else df.checkpoint()
-        )
-
     fwd = edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    sym = cut(
+    sym = _cut(
         fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
+        .distinct(),
+        lineage_cut,
     )
     for _ in range(rounds):
         keep = (
@@ -983,10 +890,11 @@ def kcore_peel(
             .where(F.col("deg") >= k)
             .select("src")
         )
-        sym = cut(
+        sym = _cut(
             sym.join(keep, "src", "left_semi")
             .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .select("src", "dst")
+            .select("src", "dst"),
+            lineage_cut,
         )
     return (
         sym.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))

@@ -124,75 +124,73 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 #: rotation commit empties this tuple.
 _WINDOW_DEFER: tuple[str, ...] = ()
 
-#: ROUND-13 ROTATION: every registered query has now held a green driver
-#: slot at least once (the r12 window went 50/50), so this round's window
-#: is pure staleness policy — each module's query whose most recent green
-#: round is OLDEST re-certifies first, then fill by global staleness.
+#: ROUND-14 ROTATION: the r13 window went 50/50, so the window stays pure
+#: staleness policy — each module's query whose most recent green round
+#: is OLDEST re-certifies first, then fill by global staleness.
 #: This list is EXACTLY tools/window_ledger.py::next_window() output at
 #: this commit, pinned by tests/test_contract.py.
 _WINDOW_PRIORITY: tuple[str, ...] = (
     "doc_bpe_token_counts",
-    "events_gather_disjunctive",
-    "range_join_event_windows",
-    "events_value_winsorized",
-    "dedup_embedding_cosine",
-    "graph_bfs_hops",
-    "graph_triangle_cohesion",
-    "multimodal_image_resize_stats",
+    "events_latest_per_user",
+    "asof_forward_click_to_purchase",
+    "doc_duplicate_spans",
+    "dedup_shingle_containment",
+    "dedup_clusters_verified",
+    "graph_degree_assortativity",
+    "multimodal_audio_quality_gate",
     "ann_pq_adc_topk",
-    "orders_constraint_audit",
+    "orders_benford_audit",
     "rangejoin_error_bursts",
-    "orders_fullouter_recon",
-    "hybrid_search_rrf",
-    "sample_domain_mixture",
-    "events_map_functions",
-    "union_priority_tiers",
-    "decontaminate_embedding_cosine",
-    "sketch_countmin_tokens",
+    "events_value_histogram",
+    "bm25_topk",
+    "sample_stratified_by_lang",
+    "order_date_functions",
+    "setops_customer_cohorts",
+    "embedding_norm_stats",
+    "events_sliding_bitmap_distinct",
     "skew_salted_user_activity",
-    "events_jsonl_roundtrip",
-    "tokenizer_vocab_coverage",
-    "doc_tile_roundtrip",
-    "tpch_q12_late_shipment",
-    "doc_rag_chunks",
-    "events_dau_mau_stickiness",
+    "events_orc_roundtrip",
+    "corpus_pmi_collocations",
+    "doc_tile_chunks",
+    "priority_status_cube",
+    "events_iqm_udaf",
+    "events_rolling_7d_active_users",
     "events_zorder_key",
     "events_hourly_rollup",
-    "events_streaming_session_parity",
-    "events_funnel_conversion",
-    "events_interval_coverage",
-    "events_weekly_retention",
-    "graph_kcore_peel",
-    "lineitem_weighted_median_price",
-    "multimodal_video_frame_sample",
-    "multimodal_wav_rms_windows",
-    "sample_leakage_safe_split",
-    "tpch_fk_orphan_audit",
-    "corpus_zipf_slope",
-    "customer_revenue_gini",
-    "dedup_components_two_star",
-    "dedup_simhash",
-    "doc_gopher_quality_rules",
-    "doc_tfidf_keywords",
-    "events_ab_test_readout",
-    "events_chi2_independence",
-    "events_cusum_changepoint",
-    "events_first_touch_attribution",
-    "events_funnel_windowed",
-    "events_hourly_gapfill",
-    "events_k_anonymity",
+    "events_streaming_dedup_parity",
+    "events_session_paths",
+    "events_streaming_stateful_parity",
+    "events_time_weighted_value",
+    "events_user_lifecycle",
+    "multimodal_video_scene_cuts",
+    "orders_abc_classification",
+    "orders_priority_scd2",
+    "orders_profile",
+    "part_unpivot_measures",
+    "sketch_kmv_join_estimate",
+    "sketch_topk_native",
+    "customer_revenue_equidepth",
+    "customer_rfm_segments",
+    "dedup_tfidf_cosine",
+    "doc_length_rank_deciles",
+    "doc_rolling_hash",
+    "events_bucket_checksums",
+    "events_decayed_engagement",
+    "events_ewma_hourly",
+    "events_hazard_curve",
+    "events_hourly_acf",
+    "events_hourly_anomaly",
 )
 
 
 def load_all() -> dict[str, QuerySpec]:
-    """Import every query module (idempotent) and return the registry,
+    """Import every query module (idempotent; an import error propagates,
+    so a broken family fails loudly instead of vanishing from the
+    registry) and return the registry,
     reordered so the driver's checked window covers every operator family
     (see ``_WINDOW_PRIORITY``)."""
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            pass  # module not built yet — registry stays partial during bring-up
+        importlib.import_module(mod)
     ordered: dict[str, QuerySpec] = {}
     for name in _WINDOW_PRIORITY:
         if name in QUERIES:

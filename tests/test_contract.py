@@ -28,7 +28,7 @@ def test_entry_smoke(spark):
 def test_registry_consistency(spark):
     mod = _load_entry()
     qs, osql = mod.queries(), mod.oracle_sql()
-    assert len(qs) >= 40
+    assert len(qs) == 228
     assert set(osql) <= set(qs)
     # every callable is (spark, sf_dir) -> DataFrame (lazy — no job run here)
     for name, fn in qs.items():

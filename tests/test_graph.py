@@ -1,5 +1,5 @@
 """Connected-components unit tests: chains, cycles, disjoint clusters —
-the label-propagation fixpoint must equal the true components."""
+the large-star/small-star fixpoint must equal the true components."""
 
 from __future__ import annotations
 
@@ -13,6 +13,24 @@ def _clusters(spark, edges, **kw):
     df = spark.createDataFrame(edges, ["a", "b"])
     rows = connected_components(df, "a", "b", **kw).collect()
     return {r["node"]: r["cluster_id"] for r in rows}
+
+
+def _true_components(edges):
+    """Driver-side union-find: the reference every kernel test checks against."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
 
 
 def test_chain_collapses_to_min(spark):
@@ -50,82 +68,51 @@ def test_invalid_lineage_cut_rejected(spark):
         _clusters(spark, [(1, 2)], lineage_cut="bogus")
 
 
-def _star_clusters(spark, edges, **kw):
-    from bigdatatiler_spark.operators.graph import connected_components_star
-
-    df = spark.createDataFrame(edges, ["a", "b"])
-    rows = connected_components_star(df, "a", "b", **kw).collect()
-    return {r["node"]: r["cluster_id"] for r in rows}
-
-
-def test_two_star_matches_label_prop_on_small_graphs(spark):
+def test_small_graphs_match_union_find(spark):
     for edges in (
         [(1, 2), (2, 3), (3, 4), (4, 5)],
         [(10, 20), (20, 30), (30, 10), (7, 8), (100, 50)],
         [(2, 1), (1, 2), (2, 1), (3, 2)],
     ):
-        assert _star_clusters(spark, edges) == _clusters(spark, edges)
+        assert _clusters(spark, edges) == _true_components(edges)
 
 
 def test_two_star_beats_diameter_bound_on_deep_chain(spark):
-    """The scale argument for the two-star variant: a 60-node chain has
-    diameter 59 — label propagation cannot finish inside MAX_ITERS (15)
-    rounds, while large-star/small-star contracts it in O(log² n) rounds
-    and returns the exact components. Node ids are shuffled so the chain
-    order doesn't coincide with id order (the adversarial layout)."""
+    """The scale argument for the two-star kernel: a 60-node chain has
+    diameter 59 — a diameter-bound algorithm such as label propagation
+    needs 59 rounds, while large-star/small-star contracts it in
+    O(log² n) rounds and returns the exact components. Node ids are shuffled so the
+    chain order doesn't coincide with id order (the adversarial layout)."""
     import random
 
     rng = random.Random(7)
     ids = list(range(1000, 1060))
     rng.shuffle(ids)
     edges = list(zip(ids, ids[1:]))
-    got = _star_clusters(spark, edges, max_rounds=8)
+    got = _clusters(spark, edges, max_rounds=8)
     assert set(got.values()) == {min(ids)}
     assert set(got) == set(ids)
 
 
-def test_two_star_on_minhash_edges_matches_label_prop(spark):
-    """Equivalence on the real candidate-pair graph used by the
-    registered dedup queries (sf0.001 MinHash band mates)."""
-    from pyspark.sql import functions as F
-
+def test_minhash_edges_match_union_find(spark):
+    """Exactness on the real candidate-pair graph used by the registered
+    dedup queries (sf0.001 MinHash band mates)."""
     from bigdatatiler_spark.operators.dedup import dedup_minhash_lsh
-    from bigdatatiler_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
 
     pairs = dedup_minhash_lsh(spark, "/root/testdata/sf0.001").select(
         F.col("doc_id_1").alias("a"), F.col("doc_id_2").alias("b")
     )
-    lp = {r["node"]: r["cluster_id"] for r in connected_components(pairs, "a", "b").collect()}
-    ts = {
+    want = _true_components([(r["a"], r["b"]) for r in pairs.collect()])
+    got = {
         r["node"]: r["cluster_id"]
-        for r in connected_components_star(pairs, "a", "b").collect()
+        for r in connected_components(pairs, "a", "b").collect()
     }
-    assert lp == ts
-
-
-def _true_components(edges):
-    """Reference union-find for the property test."""
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {n: find(n) for n in parent}
+    assert len(want) > 0
+    assert got == want
 
 
 def test_cc_property_random_graphs(spark):
-    """Both distributed algorithms must equal a driver-side union-find on
+    """The distributed kernel must equal a driver-side union-find on
     randomized graphs (chains, cliques-ish, forests, self-loops,
     duplicates) — one batch per layout to keep Spark job count sane."""
     import random
@@ -136,11 +123,7 @@ def test_cc_property_random_graphs(spark):
         m = rng.randrange(5, 60)
         nodes = rng.sample(range(10_000), n)
         edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(m)]
-        want = _true_components(edges)
-        lp = _clusters(spark, edges)
-        ts = _star_clusters(spark, edges)
-        assert lp == want, f"label-prop trial {trial}"
-        assert ts == want, f"two-star trial {trial}"
+        assert _clusters(spark, edges) == _true_components(edges), f"trial {trial}"
 
 
 def test_keep_canonical_one_survivor_per_cluster(spark):
@@ -183,27 +166,21 @@ def test_keep_canonical_one_survivor_per_cluster(spark):
             )
 
 
-def test_two_star_round_exhaustion_stays_well_formed(spark):
-    """Exhausting max_rounds before the fixpoint must degrade to
-    partially-merged clusters — never to duplicate node rows with
-    conflicting cluster_ids (review finding: pre-fix, an unconverged
-    edge set could leave a node with two outgoing edges and the final
-    mapping join emitted it twice)."""
+def test_round_exhaustion_raises_fixpoint_not_converged(spark):
+    """Exhausting max_rounds before the fixpoint must raise, never return
+    partly merged clusters: a shuffled 60-node chain is not contracted to
+    a star in one round, and converges with enough rounds."""
     import random
+
+    from bigdatatiler_spark.operators._util import FixpointNotConverged
 
     rng = random.Random(99)
     ids = list(range(500, 560))
     rng.shuffle(ids)
     edges = list(zip(ids, ids[1:]))
-    df = spark.createDataFrame(edges, ["a", "b"])
-    from bigdatatiler_spark.operators.graph import connected_components_star
-
-    rows = connected_components_star(df, "a", "b", max_rounds=1).collect()
-    nodes = [r["node"] for r in rows]
-    assert len(nodes) == len(set(nodes)) == len(ids), "duplicate node rows"
-    # and with enough rounds the same graph fully converges
-    full = connected_components_star(df, "a", "b", max_rounds=8).collect()
-    assert {r["cluster_id"] for r in full} == {min(ids)}
+    with pytest.raises(FixpointNotConverged, match="max_rounds=1"):
+        _clusters(spark, edges, max_rounds=1)
+    assert set(_clusters(spark, edges, max_rounds=8).values()) == {min(ids)}
 
 
 def test_leakage_safe_split_keeps_neardup_pairs_together(spark):

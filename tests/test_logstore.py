@@ -69,6 +69,15 @@ def test_logstore_write_read(spark, events_df, tmp_path):
     assert store.df().count() == 6
 
 
+def test_logstore_scan_defaults_to_id_key(spark, events_df, tmp_path):
+    """scan() keys its tiebreak on ``id`` by default, like point_read,
+    page and cursor, so a store keyed by ``id`` needs no id_col."""
+    store = LogStore(spark, str(tmp_path / "scan"))
+    store.create(events_df.withColumnRenamed("event_id", "id"))
+    top = store.scan(user_id="u1", limit=2).collect()
+    assert [r["id"] for r in top] == [3, 2]
+
+
 def test_cursor_drain_is_disjoint_ordered_exhaustive(spark, events_df, tmp_path):
     """O6: the keyset cursor must drain the store in (ts DESC, id DESC)
     order with disjoint pages covering every row — the reference's

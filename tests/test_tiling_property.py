@@ -9,6 +9,7 @@ One Spark job per hypothesis example is too slow, so each example is a
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -109,3 +110,23 @@ def test_bytecap_roundtrip_and_cap_property(spark, sizes, cap, compressible):
     ):
         assert sorted(r["idx"]) == list(range(r["tot"]))
     tiled.unpersist()
+
+
+def test_bytecap_round_exhaustion_raises(spark):
+    """A mixed payload (compressible runs + incompressible text) whose
+    first-pass chunks overshoot the cap needs several re-split rounds.
+    With one round the residue is still over the cap: tile_bytecap must
+    raise, not return the text without it."""
+    from bigdatatiler_spark.logstore.tile import tile_bytecap
+    from bigdatatiler_spark.operators._util import FixpointNotConverged
+
+    payload = "".join(
+        ("ab" * 700 + _pseudo_random_text(i, 1500)) for i in range(5)
+    )
+    df = spark.createDataFrame([(0, payload)], ["rec_id", "payload"])
+    kw = dict(max_zip_bytes=400, first_floor=200, resplit_floor=50)
+    with pytest.raises(FixpointNotConverged, match="max_rounds=1"):
+        tile_bytecap(df, "payload", "rec_id", max_rounds=1, **kw)
+    tiled = tile_bytecap(df, "payload", "rec_id", **kw)
+    got = reassemble(tiled, id_col="rec_id").collect()
+    assert [r["payload"] for r in got] == [payload]
